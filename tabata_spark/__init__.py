@@ -12,8 +12,9 @@ From-scratch reimplementation of the capabilities of jee51/tabata
   ``groupBy('record_id')`` aggregation, so the same code path scales
   from 52 flight records to 100 TB;
 - learned components (instant detection, confidence tubes) use MLlib;
-- the slow path (scipy parity for Savitzky-Golay edges) is confined to
-  Arrow-batched ``applyInPandas`` and is opt-in.
+- per-record numpy kernels (the Selector's indicator grid and belief,
+  the Tube's bounds and scores) run as Arrow-batched ``applyInPandas``
+  over one ``groupBy('record_id')``.
 """
 
 from tabata_spark.core.naming import byunits, get_colname, nameunit

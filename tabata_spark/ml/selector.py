@@ -296,50 +296,52 @@ class Selector:
             F.when(F.col("seq") <= F.col("instant"), F.lit(0.0)).otherwise(F.lit(1.0)),
         )
         labeled = labeled.cache()
-        n_total = labeled.count()
+        try:
+            n_total = labeled.count()
 
-        p = self.learn_params["samples_percent"]
-        split_frac = self.learn_params["min_samples_split"]
-        rn = self.learn_params["retry_number"]
+            p = self.learn_params["samples_percent"]
+            split_frac = self.learn_params["min_samples_split"]
+            rn = self.learn_params["retry_number"]
 
-        def fit_tree(fraction: float, cols: list[str], seed: int):
-            sample = labeled.sample(withReplacement=True, fraction=fraction, seed=seed)
-            asm = VectorAssembler(inputCols=cols, outputCol="features")
-            n_sample = max(int(n_total * fraction), 1)
-            clf = DecisionTreeClassifier(
-                labelCol="label",
-                featuresCol="features",
-                # sklearn min_samples_split=frac gates node *splits* at
-                # ceil(frac*n); MLlib gates per-child instance counts —
-                # half the split threshold approximates it
-                minInstancesPerNode=max(1, int(math.ceil(split_frac * n_sample / 2))),
-                seed=seed,
-            )
-            model = clf.fit(asm.transform(sample).select("features", "label"))
-            fi = np.zeros(len(cols))
-            imp = model.featureImportances
-            for i, v in zip(imp.indices, imp.values):
-                fi[i] = v
-            return model, fi
+            def fit_tree(fraction: float, cols: list[str], seed: int):
+                sample = labeled.sample(withReplacement=True, fraction=fraction, seed=seed)
+                asm = VectorAssembler(inputCols=cols, outputCol="features")
+                n_sample = max(int(n_total * fraction), 1)
+                clf = DecisionTreeClassifier(
+                    labelCol="label",
+                    featuresCol="features",
+                    # sklearn min_samples_split=frac gates node *splits* at
+                    # ceil(frac*n); MLlib gates per-child instance counts —
+                    # half the split threshold approximates it
+                    minInstancesPerNode=max(1, int(math.ceil(split_frac * n_sample / 2))),
+                    seed=seed,
+                )
+                model = clf.fit(asm.transform(sample).select("features", "label"))
+                fi = np.zeros(len(cols))
+                imp = model.featureImportances
+                for i, v in zip(imp.indices, imp.values):
+                    fi[i] = v
+                return model, fi
 
-        fi = np.zeros(len(feat_names))
-        for k in range(rn):
-            _, fik = fit_tree(p, feat_names, self.seed + k)
-            fi += fik
+            fi = np.zeros(len(feat_names))
+            for k in range(rn):
+                _, fik = fit_tree(p, feat_names, self.seed + k)
+                fi += fik
 
-        seuil = np.percentile(fi, self.learn_params["retry_percentile"])
-        keep = [i for i in range(len(feat_names)) if fi[i] > seuil]
-        p1 = min(0.5, p * rn)
-        model, fi2 = fit_tree(p1, [feat_names[i] for i in keep], self.seed + rn)
-        while np.sum(fi2 == 0) > 0:
-            keep = [keep[i] for i in range(len(keep)) if fi2[i] > 0]
+            seuil = np.percentile(fi, self.learn_params["retry_percentile"])
+            keep = [i for i in range(len(feat_names)) if fi[i] > seuil]
+            p1 = min(0.5, p * rn)
             model, fi2 = fit_tree(p1, [feat_names[i] for i in keep], self.seed + rn)
+            while np.sum(fi2 == 0) > 0:
+                keep = [keep[i] for i in range(len(keep)) if fi2[i] > 0]
+                model, fi2 = fit_tree(p1, [feat_names[i] for i in keep], self.seed + rn)
 
-        self._kept_names = [feat_names[i] for i in keep]
-        self.idcodes = [all_codes[i] for i in keep]
-        self._model = model
-        self.computed = {}
-        labeled.unpersist()
+            self._kept_names = [feat_names[i] for i in keep]
+            self.idcodes = [all_codes[i] for i in keep]
+            self._model = model
+            self.computed = {}
+        finally:
+            labeled.unpersist()
         return self
 
     def describe(self) -> str:

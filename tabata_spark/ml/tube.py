@@ -11,19 +11,24 @@ per record are the anomaly scores (tubes.py:376-406).
 
 Spark-first design:
 
-- synthetic factors TIME/MEDIAN/CAUSAL (tubes.py:214-219,328-330) are
-  native record-window expressions (row position, exact per-record
-  median, seq-ordered first value) — computed once, reused by every
-  ensemble member;
 - train/test disjointness (tubes.py:224-227) comes from one seeded
   ``rand()`` column per iteration: train = u < p, test = p ≤ u < 2p —
   without-replacement stratification instead of the reference's
   with-replacement choice (deterministic, one pass, no anti-join);
-- each kept model is stored as plain (intercept, coefs, cols, r2), so
-  ``estimate`` is K inline linear expressions + least/greatest/avg per
-  row — pure codegen, no model.transform, no UDF;
-- ``scores`` is ONE groupBy(record_id) over all records and all
-  targets (the reference loops records in Python).
+  fitting derives the synthetic factors TIME/MEDIAN/CAUSAL
+  (tubes.py:214-219) as record-window expressions;
+- each kept model is stored as plain (intercept, {col: coef}, r2);
+- applying the models is one per-record numpy kernel
+  (``_tube_bounds``): synthetic factors, K linear predictions,
+  z/zmin/zmax and the SG-smoothed bounds (``savgol_filter_np``) for
+  every target of a record in one Python call. The tube's cost is
+  per-row arithmetic over a record held in memory, so a plan built
+  from Spark expressions only added planning work that grows with
+  targets × bounds;
+- ``scores`` is ONE select → groupBy(record_id) → applyInPandas over
+  all records and all targets: one scan, one exchange (the reference
+  loops records in Python); ``estimate_frame`` runs the same kernel
+  and joins its bounds back onto the input rows.
 """
 
 from __future__ import annotations
@@ -34,9 +39,10 @@ import random
 import numpy as np
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from tabata_spark.core.signalset import SignalSet
-from tabata_spark.operators.savgol import savgol
+from tabata_spark.operators.savgol import savgol_filter_np
 
 SYNTH = ("TIME", "MEDIAN", "CAUSAL")
 
@@ -52,6 +58,122 @@ def _with_synthetic(df: DataFrame, target: str) -> DataFrame:
         .withColumn("MEDIAN", F.expr(f"percentile(`{target}`, 0.5)").over(frame))
         .withColumn("CAUSAL", F.first(F.col(f"`{target}`")).over(frame))
     )
+
+
+# ------------------------------------------------------------- kernel
+#
+# Per-record numpy kernel behind ``estimate_frame`` and ``scores``. A
+# column arrives as (values, null mask): Spark keeps null and NaN
+# apart, and SQL semantics treat them differently — a null factor makes
+# the row's bounds null (never out of tube), while NaN orders above
+# every number (a NaN ``y`` is above any numeric ``zmax``, any numeric
+# ``y`` is below a NaN ``zmin``).
+
+
+def _kernel_input(data: DataFrame, cols: list[str]) -> DataFrame:
+    """record_id, seq, then per column its double value ``v<i>`` and
+    null flag ``n<i>`` (pandas turns a null double into NaN, and the
+    tube treats the two differently)."""
+    return data.select(
+        "record_id",
+        "seq",
+        *[
+            e
+            for i, c in enumerate(cols)
+            for e in (
+                F.col(f"`{c}`").cast("double").alias(f"v{i}"),
+                F.col(f"`{c}`").isNull().alias(f"n{i}"),
+            )
+        ],
+    )
+
+
+def _sorted_record(pdf, ncols: int):
+    """The group's rows in seq order, and its columns as value and
+    null-mask arrays."""
+    pdf = pdf.sort_values("seq", kind="stable")
+    v = [pdf[f"v{i}"].to_numpy(dtype=float) for i in range(ncols)]
+    nl = [pdf[f"n{i}"].to_numpy(dtype=bool) for i in range(ncols)]
+    return pdf, v, nl
+
+
+def _median(y: np.ndarray, null: np.ndarray) -> tuple[float, bool]:
+    """``percentile(y, 0.5)`` as Spark computes it: nulls skipped, NaN
+    sorted above every number, the two middle values interpolated."""
+    v = np.sort(y[~null])
+    m = len(v)
+    if m == 0:
+        return math.nan, True
+    lo, hi = v[(m - 1) // 2], v[m // 2]
+    return (float(lo) if m % 2 else 0.5 * lo + 0.5 * hi), False
+
+
+def _smooth(v: np.ndarray, null: np.ndarray, width: int):
+    """SG(width, 2) of one bound with interp edges (savgol_filter_np).
+    An output row is null when its fit window holds a null; a record
+    shorter than ``width`` takes one global fit that skips null rows
+    (null only when every row is)."""
+    n = len(v)
+    if n < width:
+        if null.all():
+            return v, null
+        return savgol_filter_np(np.where(null, 0.0, v), width, 2), np.zeros(n, bool)
+    # row i's window starts at clip(i - h, 0, n - width): interior rows
+    # are centred, the h edge rows share the first/last window
+    start = np.clip(np.arange(n) - width // 2, 0, n - width)
+    cum = np.concatenate(([0], np.cumsum(null)))
+    return savgol_filter_np(v, width, 2), cum[start + width] > cum[start]
+
+
+def _tube_bounds(v, nl, yi: int, members, q: float, w: int):
+    """One target's tube over one record (tubes.py:306-356): K linear
+    predictions → z = mean, zmin/zmax = z ∓ q·(z − least/greatest) →
+    SG-smoothed bounds. Returns (z, z null, zmin, zmax, bound null)."""
+    y, yn = v[yi], nl[yi]
+    n = len(y)
+    if not members:
+        nan = np.full(n, math.nan)
+        return nan, np.zeros(n, bool), nan, nan, np.zeros(n, bool)
+    synth: dict = {"TIME": (np.arange(n, dtype=float), np.zeros(n, bool))}
+
+    def factor(c):
+        if c not in synth and c in ("MEDIAN", "CAUSAL"):
+            m, mn = _median(y, yn) if c == "MEDIAN" else (y[0], yn[0])
+            synth[c] = (np.full(n, m), np.full(n, mn))
+        return synth[c] if isinstance(c, str) else (v[c], nl[c])
+
+    preds, masks = [], []
+    for b0, terms in members:
+        p, pn = np.full(n, float(b0)), np.zeros(n, bool)
+        for c, b in terms:
+            x, xn = factor(c)
+            p, pn = p + b * x, pn | xn
+        preds.append(p)
+        masks.append(pn)
+    P, M = np.array(preds), np.array(masks)
+    z = P[0]
+    for p in P[1:]:  # left to right, as Spark adds them
+        z = z + p
+    z = z / float(len(P))
+    zn = M.any(axis=0)  # one null prediction makes z, and so the row, null
+    # NaN is the largest value: least is NaN only if every prediction
+    # is, greatest if any is
+    zmin = z - q * (z - np.fmin.reduce(P, axis=0))
+    zmax = z + q * (P.max(axis=0) - z)
+    bn = zn
+    if w > 0:
+        zmin, bn = _smooth(zmin, zn, 2 * w + 1)
+        zmax, _ = _smooth(zmax, zn, 2 * w + 1)
+    return z, zn, zmin, zmax, bn
+
+
+def _out_of_tube(y, yn, zmin, zmax, bn) -> int:
+    """Rows with y > zmax or y < zmin under Spark's ordering (NaN above
+    every number); a null y or null bound never counts."""
+    ynan = np.isnan(y)
+    above = (ynan & ~np.isnan(zmax)) | (y > zmax)
+    below = (np.isnan(zmin) & ~ynan) | (y < zmin)
+    return int(np.count_nonzero(~yn & ~bn & (above | below)))
 
 
 class Tube:
@@ -106,36 +228,38 @@ class Tube:
         evaluator = RegressionEvaluator(
             labelCol="__y", predictionCol="prediction", metricName="r2"
         )
-        for i in range(lp["retry_number"]):
-            k = min(rng.randint(1, len(cols)), lp["max_features"], len(cols))
-            cc = rng.sample(cols, k)
-            u = F.rand(seed=self.seed * 1000 + i)
-            tagged = base.withColumn("__u", u)
-            train = tagged.filter(F.col("__u") < p)
-            test = tagged.filter((F.col("__u") >= p) & (F.col("__u") < 2 * p))
-            asm = VectorAssembler(inputCols=cc, outputCol="features")
-            lr = LinearRegression(featuresCol="features", labelCol="__y")
-            model = lr.fit(asm.transform(train).select("features", "__y"))
-            r2 = evaluator.evaluate(
-                model.transform(asm.transform(test).select("features", "__y"))
-            )
-            entry = (
-                float(model.intercept),
-                dict(zip(cc, [float(v) for v in model.coefficients])),
-                float(r2),
-            )
-            if i < lp["keep_best_number"]:
-                pop.append(entry)
-            else:
-                worst = min(range(len(pop)), key=lambda j: pop[j][2])
-                if r2 > pop[worst][2]:
-                    pop[worst] = entry
-                    miss = 0
+        try:
+            for i in range(lp["retry_number"]):
+                k = min(rng.randint(1, len(cols)), lp["max_features"], len(cols))
+                cc = rng.sample(cols, k)
+                u = F.rand(seed=self.seed * 1000 + i)
+                tagged = base.withColumn("__u", u)
+                train = tagged.filter(F.col("__u") < p)
+                test = tagged.filter((F.col("__u") >= p) & (F.col("__u") < 2 * p))
+                asm = VectorAssembler(inputCols=cc, outputCol="features")
+                lr = LinearRegression(featuresCol="features", labelCol="__y")
+                model = lr.fit(asm.transform(train).select("features", "__y"))
+                r2 = evaluator.evaluate(
+                    model.transform(asm.transform(test).select("features", "__y"))
+                )
+                entry = (
+                    float(model.intercept),
+                    dict(zip(cc, [float(v) for v in model.coefficients])),
+                    float(r2),
+                )
+                if i < lp["keep_best_number"]:
+                    pop.append(entry)
                 else:
-                    miss += 1
-                    if miss == lp["keep_best_number"]:
-                        break
-        base.unpersist()
+                    worst = min(range(len(pop)), key=lambda j: pop[j][2])
+                    if r2 > pop[worst][2]:
+                        pop[worst] = entry
+                        miss = 0
+                    else:
+                        miss += 1
+                        if miss == lp["keep_best_number"]:
+                            break
+        finally:
+            base.unpersist()
         return pop
 
     def fit(self) -> "Tube":
@@ -159,68 +283,103 @@ class Tube:
 
     # ------------------------------------------------------------ estimate
 
+    def _kernel_spec(self, targets: list[str]):
+        """Columns the per-record kernel reads, and each target's
+        ensemble rewritten over their positions: ``(target, y index,
+        [(intercept, [(factor, coef)…])…])``, a factor being a column
+        position or a SYNTH name."""
+        cols: list[str] = []
+
+        def pos(c: str) -> int:
+            if c not in cols:
+                cols.append(c)
+            return cols.index(c)
+
+        spec = []
+        for t in targets:
+            members = [
+                (b0, [(c if c in SYNTH else pos(c), b) for c, b in coefs.items()])
+                for b0, coefs, _ in self._reg[t]
+            ]
+            spec.append((t, pos(t), members))
+        return cols, spec
+
     def estimate_frame(self, target: str, df: DataFrame | None = None) -> DataFrame:
         """Tube bounds for every row of every record at once
-        (tubes.py:306-356): K inline linear predictions → z/zmin/zmax =
-        avg/least/greatest → scale by tube_factor → SG-smooth bounds.
+        (tubes.py:306-356), from the per-record kernel ``_tube_bounds``
+        run in one grouped pass and joined back on (record_id, seq).
 
         Returns the input plus columns ``z, zmin, zmax``. Unknown
         target → NaN columns (tubes.py:318-322)."""
         data = df if df is not None else self.sset.df
-        pop = self._reg.get(target)
-        if not pop:
+        if not self._reg.get(target):
             nan = F.lit(float("nan"))
             return data.withColumn("z", nan).withColumn("zmin", nan).withColumn("zmax", nan)
 
-        needed = sorted({c for _, coefs, _ in pop for c in coefs})
-        out = _with_synthetic(data, target) if any(c in SYNTH for c in needed) else data
+        import pandas as pd
 
-        preds = []
-        for j, (b0, coefs, _) in enumerate(pop):
-            expr = F.lit(b0)
-            for c, b in coefs.items():
-                expr = expr + F.lit(b) * F.col(f"`{c}`")
-            preds.append(expr.alias(f"__p{j}"))
-        out = out.select("*", *preds)
-        pcols = [F.col(f"__p{j}") for j in range(len(pop))]
-        z = sum(pcols[1:], pcols[0]) / F.lit(float(len(pop)))
-        zmin = pcols[0] if len(pcols) == 1 else F.least(*pcols)
-        zmax = pcols[0] if len(pcols) == 1 else F.greatest(*pcols)
-        q = self.tube_params["tube_factor"]
-        out = (
-            out.withColumn("z", z)
-            .withColumn("zmin", F.col("z") - q * (F.col("z") - zmin))
-            .withColumn("zmax", F.col("z") + q * (zmax - F.col("z")))
-            .drop(*[f"__p{j}" for j in range(len(pop))])
+        cols, spec = self._kernel_spec([target])
+        _, yi, members = spec[0]
+        q, w = self.tube_params["tube_factor"], self.tube_params["filter_width"]
+        inp = _kernel_input(data, cols)
+        schema = T.StructType(
+            [inp.schema["record_id"], inp.schema["seq"]]
+            + [T.StructField(c, T.DoubleType()) for c in ("z", "zmin", "zmax")]
         )
-        w = self.tube_params["filter_width"]
-        if w > 0:
-            width = 2 * w + 1
-            out = savgol(out, "zmin", "zmin", width, 2, 0)
-            out = savgol(out, "zmax", "zmax", width, 2, 0)
-        return out.drop(*[c for c in SYNTH if c in out.columns and c not in data.columns])
+
+        def fn(pdf: "pd.DataFrame") -> "pd.DataFrame":
+            pdf, v, nl = _sorted_record(pdf, len(cols))
+            z, zn, lo, hi, bn = _tube_bounds(v, nl, yi, members, q, w)
+            # masked arrays keep NaN and null apart on the way back
+            out = {
+                c: pd.arrays.FloatingArray(a, m)
+                for c, a, m in (("z", z, zn), ("zmin", lo, bn), ("zmax", hi, bn))
+            }
+            return pd.DataFrame(
+                {"record_id": pdf["record_id"].to_numpy(), "seq": pdf["seq"].to_numpy(), **out}
+            )
+
+        est = inp.groupBy("record_id").applyInPandas(fn, schema)
+        return data.join(est, ["record_id", "seq"], "left").select(
+            *[F.col(f"`{c}`") for c in data.columns], "z", "zmin", "zmax"
+        )
 
     # -------------------------------------------------------------- scores
 
     def scores(self, df: DataFrame | None = None) -> DataFrame:
-        """Out-of-tube counts per record × target in one aggregation
-        per target (tubes.py:392-406). Returns
-        (record_id, N, <target count columns…>)."""
+        """Out-of-tube counts per record × target (tubes.py:392-406) in
+        one grouped pass: one scan, the rows exchanged once on
+        record_id, every target scored by ``_tube_bounds`` inside the
+        same Python call. Returns (record_id, N, score_<target>…),
+        ordered by record_id."""
+        import pandas as pd
+
         data = df if df is not None else self.sset.df
-        result = data.groupBy("record_id").agg(F.count(F.lit(1)).alias("N"))
-        for target in sorted(self._reg):
-            est = self.estimate_frame(target, data)
-            y = F.col(f"`{target}`")
-            cnt = (
-                est.groupBy("record_id")
-                .agg(
-                    F.count(
-                        F.when((y > F.col("zmax")) | (y < F.col("zmin")), 1)
-                    ).alias(f"score_{target}")
-                )
-            )
-            result = result.join(cnt, "record_id", "left")
-        return result.orderBy("record_id")
+        targets = sorted(self._reg)
+        cols, spec = self._kernel_spec(targets)
+        q, w = self.tube_params["tube_factor"], self.tube_params["filter_width"]
+        inp = _kernel_input(data, cols)
+        schema = T.StructType(
+            [inp.schema["record_id"], T.StructField("N", T.LongType())]
+            + [T.StructField(f"score_{t}", T.LongType()) for t in targets]
+        )
+
+        def fn(pdf: "pd.DataFrame") -> "pd.DataFrame":
+            pdf, v, nl = _sorted_record(pdf, len(cols))
+            row = {"record_id": [pdf["record_id"].iloc[0]], "N": [len(pdf)]}
+            for t, yi, members in spec:
+                _, _, lo, hi, bn = _tube_bounds(v, nl, yi, members, q, w)
+                row[f"score_{t}"] = [_out_of_tube(v[yi], nl[yi], lo, hi, bn)]
+            return pd.DataFrame(row)
+
+        # one row per record: sorting it in one partition needs no
+        # range-partition sampling job, which would run the kernel twice
+        return (
+            inp.groupBy("record_id")
+            .applyInPandas(fn, schema)
+            .repartition(1)
+            .sortWithinPartitions("record_id")
+        )
 
     def score_proportions(self, df: DataFrame | None = None) -> DataFrame:
         """scr[col]/N (tubes.py:417)."""

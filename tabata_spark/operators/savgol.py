@@ -23,6 +23,10 @@ Two execution paths:
   barrier; ~3*width window expressions, use for width ≲ 64);
 - ``savgol_apply``: Arrow-batched ``applyInPandas`` per record calling
   the numpy kernel — for very wide filters or many columns at once.
+
+The native path serves the indicator and battery queries. The Tube
+uses neither path: it smooths its bounds with ``savgol_filter_np``
+inside its own per-record kernel.
 """
 
 from __future__ import annotations

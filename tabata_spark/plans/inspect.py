@@ -28,6 +28,9 @@ def plan_counts(df: DataFrame) -> dict[str, int]:
     """Occurrence counts of load-bearing physical operators."""
     s = explain_str(df, "simple")
     keys = {
+        # source reads: file (FileScan), DataSource V2 (BatchScan) and
+        # RDD/local-data (Scan ExistingRDD …) leaves
+        "scans": r"\b(?:FileScan|BatchScan|Scan)\b",
         "exchanges": r"Exchange (?:hash|range|SinglePartition)",
         "broadcast_joins": r"BroadcastHashJoin",
         "sortmerge_joins": r"SortMergeJoin",

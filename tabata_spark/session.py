@@ -30,7 +30,12 @@ def get_spark(
       ``record_id`` partitions.
     - Arrow on: the scipy-parity ``applyInPandas`` path pays batch
       (not row) serialization.
+    - The directory holding ``tabata_spark`` goes on ``PYTHONPATH``
+      before the JVM starts: Python workers inherit the JVM's
+      environment, and every grouped-map kernel must import the engine
+      whatever directory the driver script runs from.
     """
+    _export_engine_path()
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
     builder = (
         SparkSession.builder.appName(app_name)
@@ -74,3 +79,10 @@ def get_spark(
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+def _export_engine_path() -> None:
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    paths = [p for p in os.environ.get("PYTHONPATH", "").split(os.pathsep) if p]
+    if root not in paths:
+        os.environ["PYTHONPATH"] = os.pathsep.join([root, *paths])

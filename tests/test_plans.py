@@ -641,3 +641,23 @@ def test_salted_candidates_broadcast_shards_no_self_join(spark):
     assert c["broadcast_joins"] >= 1, c  # the shard-count map
     assert c["windows"] == 0, c
     assert c["python_evals"] == 0, c
+
+
+def test_tube_scores_single_scan_single_pandas_pass(spark, sset, tmp_path):
+    """Tube.scores over two targets reads the stored set once and
+    scores every record × target in one grouped pandas pass: no
+    per-target or per-bound subplan, no join back onto a count."""
+    from tabata_spark.ml.tube import Tube
+
+    tube = Tube(sset.save(str(tmp_path / "signals")))
+    tube._reg = {
+        "ALT[m]": [(44330.0, {"Tisa[K]": -153.85}, 0.9)],
+        "Tisa[K]": [
+            (288.1, {"ALT[m]": -0.0065}, 0.9),
+            (0.0, {"MEDIAN": 1.0, "TIME": -0.001}, 0.8),
+        ],
+    }
+    c = plan_counts(tube.scores())
+    assert c["scans"] == 1, c
+    assert c["python_evals"] == 1, c  # the one FlatMapGroupsInPandas
+    assert c["broadcast_joins"] == 0 and c["sortmerge_joins"] == 0, c

@@ -104,3 +104,26 @@ def test_scores(labeled_selector):
     s = sel.score()
     assert np.isfinite(s)
     assert set(sel.all_scores()) == set(sel.selected)
+
+
+def test_failed_fit_releases_cached_frame(spark, sset, labeled_selector, monkeypatch):
+    """fit caches its labeled frame; a fit that fails midway must not
+    leave it persisted (the indicator frame stays, as on success)."""
+    from pyspark.ml.classification import DecisionTreeClassifier
+
+    def fail(*args, **kwargs):
+        raise RuntimeError("tree fit failed")
+
+    sel = Selector(sset, seed=7)
+    sel.variables = set(labeled_selector.variables)
+    sel.selected = dict(labeled_selector.selected)
+    sel.feature_params = dict(range_width=[10], range_sigma=[5], max_order=1)
+    sel.learn_params = dict(labeled_selector.learn_params)
+    sel.make_indicators().count()
+    jsc = spark.sparkContext._jsc
+    before = sorted(jsc.getPersistentRDDs().keys())
+    monkeypatch.setattr(DecisionTreeClassifier, "fit", fail)
+    with pytest.raises(RuntimeError, match="tree fit failed"):
+        sel.fit()
+    assert sorted(jsc.getPersistentRDDs().keys()) == before
+    sel._dsi.unpersist()
