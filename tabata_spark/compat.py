@@ -132,8 +132,9 @@ class Opset:
             )
         spark = _spark()
         if self.sset is None:
-            SignalSet.from_records(spark, {name: df}).save(self.storename)
-            self.sset = SignalSet.load(spark, self.storename, phase=self.phase)
+            self.sset = SignalSet.from_records(spark, {name: df}, phase=self.phase).save(
+                self.storename
+            )
         else:
             self.sset = self.sset.put(df, record=name) if self.sset.path else None
             if self.sset is None or self.sset.path is None:

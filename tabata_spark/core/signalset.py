@@ -79,6 +79,7 @@ class SignalSet:
         phase: str | None = None,
         path: str | None = None,
         records: list[str] | None = None,
+        fmt: str = "parquet",
     ):
         missing = [c for c in ("record_id", "seq") if c not in df.columns]
         if missing:
@@ -88,6 +89,8 @@ class SignalSet:
             )
         self.df = df
         self.path = path
+        # storage format of a path-backed set: put() writes and re-opens in it
+        self.fmt = fmt
         self._records = records
         # cursor-compat state (reference opset.py:65-72); not used by the engine
         self.sigpos = 0
@@ -106,8 +109,20 @@ class SignalSet:
     ) -> "SignalSet":
         """Open a stored signal set (reference Opset.__init__).
         ``fmt``: any Spark batch source — parquet (default) or orc
-        both give columnar pruning + predicate pushdown."""
-        return cls(spark.read.format(fmt).load(path), phase=phase, path=path)
+        both give columnar pruning + predicate pushdown.
+
+        ``record_id`` is always read as a string: partition-type
+        inference would turn names like ``0001`` into the integer 1."""
+        df = spark.read.format(fmt).load(path)
+        schema = T.StructType(
+            [
+                T.StructField(f.name, T.StringType()) if f.name == "record_id" else f
+                for f in df.schema
+            ]
+        )
+        if schema != df.schema:
+            df = spark.read.schema(schema).format(fmt).load(path)
+        return cls(df, phase=phase, path=path, fmt=fmt)
 
     def save(self, path: str, mode: str = "overwrite", fmt: str = "parquet") -> "SignalSet":
         """Materialize partitioned by record_id (partition pruning for
@@ -227,9 +242,14 @@ class SignalSet:
 
     def to_pandas_record(self, pos: int | str) -> Any:
         """One record as a reference-shaped pandas frame (time index,
-        channel columns, ``index.name`` = record name)."""
+        channel columns, ``index.name`` = record name).
+
+        One Spark job: the pruned partition is collected as is and
+        sorted by ``seq`` on the driver, where the record ends up
+        anyway — a Spark ``orderBy`` would add a range-sampling job and
+        an exchange."""
         name = self._resolve(pos)
-        pdf = self.record(name).orderBy("seq").toPandas()
+        pdf = self.record(name).toPandas().sort_values("seq", kind="stable", ignore_index=True)
         if "ts" in pdf.columns:
             pdf = pdf.set_index("ts")
             pdf.index.name = name
@@ -251,7 +271,11 @@ class SignalSet:
 
         Path-backed sets use dynamic partition overwrite — only the
         written record's partition is replaced, an O(record) write even
-        on a 100 TB set. In-memory sets rebuild the union lazily.
+        on a 100 TB set. The record is cast to the stored column types
+        and written as one file in the stored format; the set is then
+        re-opened with its known schema (no inference) and its known
+        record list, so the write is the call's only Spark job. In-memory
+        sets rebuild the union lazily.
         """
         pd = _pandas()
         spark = self.df.sparkSession
@@ -275,24 +299,44 @@ class SignalSet:
             if "seq" not in new.columns:
                 w = Window.partitionBy("record_id").orderBy(F.monotonically_increasing_id())
                 new = new.withColumn("seq", F.row_number().over(w) - F.lit(1))
+        # listed BEFORE any write: listing afterwards would scan the old
+        # frame, whose file index names files the overwrite deleted
+        records = sorted(set(self.records) | {name})
         if self.path:
-            # align to existing schema (missing channels -> null)
-            existing = set(self.df.columns)
-            for c in existing - set(new.columns):
-                new = new.withColumn(c, F.lit(None).cast(self.df.schema[c].dataType))
+            # align to the stored schema: missing channels -> null, every
+            # column cast to its stored type (an int64 channel written
+            # into a double store would make later reads of it fail)
+            schema, have = self.df.schema, set(new.columns)
+            new = new.select(
+                *(
+                    (F.col(f"`{f.name}`") if f.name in have else F.lit(None))
+                    .cast(f.dataType)
+                    .alias(f.name)
+                    for f in schema
+                )
+            )
             # per-write option (not session conf): with Spark's default
             # STATIC overwrite mode a plain overwrite would delete every
             # OTHER record's partition — pinning dynamic here makes put()
             # safe under any user-supplied SparkSession
-            new.select(*self.df.columns).write.option(
-                "partitionOverwriteMode", "dynamic"
-            ).partitionBy("record_id").mode("overwrite").parquet(self.path)
-            out = SignalSet.load(spark, self.path, phase=self.phase)
+            new.coalesce(1).write.option("partitionOverwriteMode", "dynamic").partitionBy(
+                "record_id"
+            ).mode("overwrite").format(self.fmt).save(self.path)
+            # a fresh file index (the old one names deleted files), but
+            # the known schema: no footer-reading inference job
+            out = SignalSet(
+                spark.read.schema(schema).format(self.fmt).load(self.path),
+                phase=self.phase,
+                path=self.path,
+                records=records,
+                fmt=self.fmt,
+            )
         else:
             kept = self.df.filter(F.col("record_id") != name)
             out = SignalSet(
                 kept.unionByName(new, allowMissingColumns=True),
                 phase=self.phase,
+                records=records,
             )
         out.sigpos = out.records.index(name)
         out.colname = get_colname(out.channels, self.colname)

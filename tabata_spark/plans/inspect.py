@@ -4,14 +4,18 @@ I'd want at 100 TB?" feedback loop.
 Used by tests to assert structural properties Catalyst should deliver:
 filters pushed into the Parquet scan, broadcast joins where a dim is
 small, whole-stage codegen in the hot path, and no Python UDFs in
-queries that claim to be JVM-only.
+queries that claim to be JVM-only. ``count_jobs`` pins the other
+small-scale cost: how many Spark jobs one call runs.
 """
 
 from __future__ import annotations
 
 import re
+import uuid
+from collections.abc import Callable
+from typing import Any
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 
 
 def explain_str(df: DataFrame, mode: str = "formatted") -> str:
@@ -91,3 +95,21 @@ def read_schemas(df: DataFrame) -> list[str]:
 def assert_no_python_udf(df: DataFrame) -> None:
     c = plan_counts(df)
     assert c["python_evals"] == 0, f"Python eval in plan: {explain_str(df, 'simple')[:500]}"
+
+
+def count_jobs(spark: SparkSession, fn: Callable[[], Any]) -> tuple[int, Any]:
+    """Run ``fn`` under a job group of its own; return the number of
+    Spark jobs it started and its result. The job count is the latency
+    floor of an interactive call at small scale (each job pays the
+    scheduler's round trip). The caller's job group is restored."""
+    sc = spark.sparkContext
+    keys = ("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel")
+    saved = {k: sc.getLocalProperty(k) for k in keys}
+    group = f"count_jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "count_jobs")
+    try:
+        out = fn()
+    finally:
+        for k, v in saved.items():
+            sc.setLocalProperty(k, v)
+    return len(sc.statusTracker().getJobIdsForGroup(group)), out

@@ -1,7 +1,10 @@
+import os
+
 import pandas as pd
 from pyspark.sql import functions as F
 
 from tabata_spark.core.signalset import SignalSet
+from tabata_spark.plans.inspect import count_jobs
 
 
 def test_records_alphabetical(sset):
@@ -128,6 +131,109 @@ def test_put_preserves_other_partitions_under_static_conf(tmp_path, sset, flight
             spark.conf.unset(key)
         else:
             spark.conf.set(key, prev)
-    assert out.records == sset.records  # no partition lost
+    assert out.records == sset.records
+    # put() keeps its known record list; check the partitions on disk
+    assert SignalSet.load(spark, path).records == sset.records  # no partition lost
     assert out.record(sset.records[1]).count() == 30
     assert out.record(sset.records[0]).count() == sset.record(sset.records[0]).count()
+
+
+def _data_files(path):
+    """Non-hidden files under ``path`` (no _SUCCESS, no .crc)."""
+    return [
+        os.path.join(d, f)
+        for d, _, files in os.walk(path)
+        for f in files
+        if not f.startswith(("_", "."))
+    ]
+
+
+def test_to_pandas_record_sorts_an_unordered_scan(sset):
+    """The driver-side sort gives the frame a Spark orderBy gave,
+    index included, even when the scan returns rows out of order."""
+    name = sset.records[3]
+    shuffled = SignalSet(sset.df.repartition(4, F.rand(7)), records=sset.records)
+    got = shuffled.to_pandas_record(name)
+    want = sset.record(name).orderBy("seq").toPandas().set_index("ts")
+    want = want.drop(columns=["record_id", "seq"])
+    want.index.name = name
+    pd.testing.assert_frame_equal(got, want)
+
+
+def test_browse_calls_run_one_spark_job(tmp_path, sset, flights):
+    spark = sset.df.sparkSession
+    stored = sset.save(str(tmp_path / "sset"))
+    assert stored.records == sset.records  # listed once, up front
+    name = sset.records[2]
+    n, pdf = count_jobs(spark, lambda: stored.to_pandas_record(name))
+    assert n == 1
+    assert len(pdf) == len(flights[name])
+    n, out = count_jobs(spark, lambda: stored.put(flights[name].head(40), record=name))
+    assert n == 1
+    assert out.records == sset.records
+    assert len(out.to_pandas_record(name)) == 40
+
+
+def test_put_on_a_store_whose_records_were_never_listed(tmp_path, sset, flights):
+    spark = sset.df.sparkSession
+    path = str(tmp_path / "sset")
+    sset.save(path)
+    stored = SignalSet.load(spark, path)
+    name = sset.records[4]
+    out = stored.put(flights[name].head(25), record=name)
+    assert out.records == sset.records
+    assert len(out.to_pandas_record(name)) == 25
+    assert SignalSet.load(spark, path).records == sset.records
+
+
+def test_numeric_looking_record_names_stay_strings(tmp_path, spark, flights):
+    frames = {"0001": flights["record_00"].head(20), "0002": flights["record_01"].head(30)}
+    path = str(tmp_path / "padded")
+    SignalSet.from_records(spark, frames).save(path)
+    stored = SignalSet.load(spark, path)
+    assert stored.records == ["0001", "0002"]
+    assert dict(stored.df.dtypes)["record_id"] == "string"
+    assert len(stored.to_pandas_record("0002")) == 30
+    out = stored.put(flights["record_02"].head(12), record="0001")
+    assert out.records == ["0001", "0002"]
+    back = out.to_pandas_record("0001")
+    assert back.index.name == "0001" and len(back) == 12
+    assert SignalSet.load(spark, path).records == ["0001", "0002"]
+
+
+def test_put_keeps_an_orc_store_orc(tmp_path, sset, flights):
+    path = str(tmp_path / "sset_orc")
+    stored = sset.save(path, fmt="orc")
+    name = sset.records[1]
+    out = stored.put(flights[name].head(30), record=name)
+    assert len(out.to_pandas_record(name)) == 30
+    files = _data_files(path)
+    assert files and all(f.endswith(".orc") for f in files), files
+    again = SignalSet.load(sset.df.sparkSession, path, fmt="orc")
+    assert again.records == sset.records
+    assert again.record(name).count() == 30
+
+
+def test_put_casts_to_the_stored_column_types(tmp_path, sset, flights):
+    """An int64 record put into a double store is written as double:
+    later reads of it, and of the whole store, keep working."""
+    path = str(tmp_path / "sset")
+    stored = sset.save(path)
+    name, other = sset.records[0], sset.records[1]
+    ints = flights[name].head(20).round().astype("int64")
+    ints.index.name = name
+    out = stored.put(ints)
+    back = out.to_pandas_record(name)
+    assert (back.dtypes == "float64").all()
+    assert back["ALT[m]"].tolist() == [float(v) for v in ints["ALT[m]"]]
+    assert len(out.to_pandas_record(other)) == len(flights[other])
+    again = SignalSet.load(sset.df.sparkSession, path)
+    assert again.df.count() == sset.df.count() - len(flights[name]) + 20
+
+
+def test_put_writes_one_file_per_record(tmp_path, sset, flights):
+    path = str(tmp_path / "sset")
+    stored = sset.save(path)
+    name = sset.records[3]
+    stored.put(flights[name].head(30), record=name)
+    assert len(_data_files(os.path.join(path, f"record_id={name}"))) == 1
