@@ -74,7 +74,11 @@ def bind1(value: Column, f) -> Column:
     work"). ``transform`` over a one-element array binds the value to
     a lambda variable, which element evaluations read in O(1); the
     emitted values are bit-identical (r17 probe: 4.4× on the sf0.1
-    shingle scan, 0 mismatching rows)."""
+    shingle scan, 0 mismatching rows).
+
+    ``bind1(v, f) == f(v)`` holds only when ``value`` is deterministic:
+    a nondeterministic value (``rand``, ``uuid``, ...) is drawn ONCE
+    here instead of once per element where ``f`` uses it."""
     return F.element_at(F.transform(F.array(value), f), 1)
 
 
@@ -1024,9 +1028,10 @@ def connected_components(
     rounds needed = graph diameter. LSH dup clusters are near-cliques
     (diameter ≤ 2-3 in practice), so the loop converges in a handful
     of rounds — the convergence check (one count per round) stops it
-    exactly; ``max_iter`` is the adversarial-chain backstop. For
-    graphs with genuinely long chains, swap in the
-    large-star/small-star alternation (Kiveris et al., "Connected
+    exactly; ``max_iter`` is the adversarial-chain backstop, and
+    running out of it raises ``RuntimeError`` rather than returning
+    unconverged labels. For graphs with genuinely long chains, swap in
+    the large-star/small-star alternation (Kiveris et al., "Connected
     Components in MapReduce"), which converges in O(log n) rounds with
     the same join-shaped rounds.
 
@@ -1085,6 +1090,15 @@ def connected_components(
         labels = new_labels
         if changed == 0:
             break
+    else:
+        # Mid-flight labels split a component; never return them.
+        if materialize == "persist":
+            edges.unpersist()
+        raise RuntimeError(
+            f"connected_components did not converge in {max_iter} rounds; "
+            "min-label propagation needs diameter + 1 rounds — raise "
+            "max_iter or use connected_components_star for long chains"
+        )
     if materialize == "persist":
         edges.unpersist()
     return labels
@@ -1105,36 +1119,6 @@ def dedup_cluster_assignments(
     )
     return labels.withColumn(
         "csize", F.count(F.lit(1)).over(Window.partitionBy("comp"))
-    )
-
-
-def minhash_lsh_mllib(
-    df: DataFrame,
-    text: str = "text",
-    id_col: str = "doc_id",
-    threshold: float = 0.3,
-    num_hash_tables: int = 8,
-    num_features: int = 1 << 18,
-) -> DataFrame:
-    """Library path: HashingTF(binary) + MinHashLSH
-    approxSimilarityJoin; returns (id_a, id_b, jaccard_distance)."""
-    from pyspark.ml.feature import HashingTF, MinHashLSH, Tokenizer
-
-    tok = Tokenizer(inputCol=text, outputCol="__toks")
-    tf = HashingTF(
-        inputCol="__toks", outputCol="__feat", binary=True, numFeatures=num_features
-    )
-    feat = tf.transform(tok.transform(df.select(id_col, text)))
-    mh = MinHashLSH(inputCol="__feat", outputCol="__mh", numHashTables=num_hash_tables, seed=42)
-    model = mh.fit(feat)
-    joined = model.approxSimilarityJoin(feat, feat, threshold, distCol="jaccard_distance")
-    return (
-        joined.filter(F.col(f"datasetA.{id_col}") < F.col(f"datasetB.{id_col}"))
-        .select(
-            F.col(f"datasetA.{id_col}").alias("id_a"),
-            F.col(f"datasetB.{id_col}").alias("id_b"),
-            F.round("jaccard_distance", 6).alias("jaccard_distance"),
-        )
     )
 
 

@@ -29,7 +29,7 @@ import numpy as np
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from tabata_spark.operators.savgol import savgol, savgol_filter_np
+from tabata_spark.operators.savgol import savgol_filter_np, savgol_native
 
 
 def indicator_np(
@@ -127,7 +127,7 @@ def indicator_col(
     """Full indicator: SG-derivative + segmentation ramp (reference
     ``indicator``, instants.py:45-93)."""
     tmp = f"__sg_{out}"
-    df = savgol(df, col, tmp, width, polyorder=deg, deriv=order)
+    df = savgol_native(df, col, tmp, width, polyorder=deg, deriv=order)
     df = segment_ramp(df, tmp, sigma, out)
     return df.drop(tmp)
 

@@ -17,16 +17,11 @@ principles (pinv of the Vandermonde design matrix), and
 ``savgol_filter_np`` is the numpy reference/oracle replicating scipy's
 ``mode='interp'`` semantics.
 
-Two execution paths:
-- ``savgol_native``: lag/lead dot product + edge correction, fully
-  JVM-side — the 100 TB path (no Python, no Arrow, no optimization
-  barrier; ~3*width window expressions, use for width ≲ 64);
-- ``savgol_apply``: Arrow-batched ``applyInPandas`` per record calling
-  the numpy kernel — for very wide filters or many columns at once.
-
-The native path serves the indicator and battery queries. The Tube
-uses neither path: it smooths its bounds with ``savgol_filter_np``
-inside its own per-record kernel.
+``savgol_native`` is the Spark path: lag/lead dot product + edge
+correction, fully JVM-side (no Python, no Arrow, no optimization
+barrier; ~3*width window expressions). It serves the indicator and
+battery queries. The Selector and Tube smooth with
+``savgol_filter_np`` inside their own per-record kernels.
 """
 
 from __future__ import annotations
@@ -37,7 +32,6 @@ from math import factorial
 import numpy as np
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 
 # ---------------------------------------------------------------- design
@@ -348,51 +342,3 @@ def _short_global_fit_maps(
             f"map_from_arrays({seq_arr}, transform({seq_arr}, p -> {fitted}))"
         ).alias("__emap"),
     )
-
-
-# ----------------------------------------------------------- applyInPandas
-
-
-def savgol_apply(
-    df: DataFrame,
-    specs: list[tuple[str, str, int, int, int]],
-    delta: float = 1.0,
-) -> DataFrame:
-    """Arrow-batched per-record SG for many (col,out,width,order,deriv)
-    specs at once — one grouped-map pass, amortizing the Arrow transfer
-    across the whole filter grid (the M1 indicator fan-out computes
-    hundreds of filtered columns; this path does them in one exchange).
-    """
-    import pandas as pd
-
-    schema = T.StructType(
-        list(df.schema)
-        + [T.StructField(o, T.DoubleType()) for _, o, _, _, _ in specs]
-    )
-
-    def fn(pdf: "pd.DataFrame") -> "pd.DataFrame":
-        pdf = pdf.sort_values("seq")
-        for colname, outname, width, order, deriv in specs:
-            pdf[outname] = savgol_filter_np(
-                pdf[colname].to_numpy(), width, order, deriv, delta
-            )
-        return pdf
-
-    return df.groupBy("record_id").applyInPandas(fn, schema)
-
-
-def savgol(
-    df: DataFrame,
-    col: str,
-    out: str,
-    width: int,
-    polyorder: int = 2,
-    deriv: int = 0,
-    delta: float = 1.0,
-    native_max_width: int = 65,
-) -> DataFrame:
-    """SG filter, picking the native path for moderate widths and the
-    Arrow path for very wide kernels."""
-    if width <= native_max_width:
-        return savgol_native(df, col, out, width, polyorder, deriv, delta)
-    return savgol_apply(df, [(col, out, width, polyorder, deriv)], delta)

@@ -3,7 +3,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from tabata_spark.operators.savgol import (
-    savgol_apply,
     savgol_coeffs,
     savgol_filter_np,
     savgol_native,
@@ -79,21 +78,3 @@ def test_native_matches_np(sset, flights, width, order, deriv):
         np.testing.assert_allclose(
             got.astype(float), want, rtol=1e-9, atol=1e-9
         )
-
-
-def test_apply_matches_np(sset, flights):
-    specs = [("ALT[m]", "sg0", 21, 2, 0), ("Vz[m/s]", "sg1", 11, 2, 1)]
-    df = savgol_apply(sset.df, specs)
-    name = sset.records[1]
-    got = (
-        df.filter(F.col("record_id") == name)
-        .orderBy("seq")
-        .select("sg0", "sg1")
-        .toPandas()
-    )
-    np.testing.assert_allclose(
-        got["sg0"], savgol_filter_np(flights[name]["ALT[m]"].to_numpy(), 21, 2, 0)
-    )
-    np.testing.assert_allclose(
-        got["sg1"], savgol_filter_np(flights[name]["Vz[m/s]"].to_numpy(), 11, 2, 1)
-    )

@@ -1,4 +1,4 @@
-"""Round-9 scale probes — the SCALE.md discipline (one measured probe
+"""20M-row scale gate — the SCALE.md discipline (one measured probe
 per changed/new family at a size big enough to expose a wrong
 asymptotic shape).
 
@@ -15,7 +15,7 @@ asymptotic shape).
    gated staleness scan and the vacuum rewrite; assert the index
    shrinks to live-rows x bands.
 
-    python tools/r9_probe.py [scale] [probe ...]
+    python tools/scale_gate_kcore.py [scale] [probe ...]
 """
 
 from __future__ import annotations

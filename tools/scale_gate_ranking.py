@@ -1,4 +1,4 @@
-"""Round-11 scale probes — the SCALE.md discipline (one measured probe
+"""20M-row scale gate — the SCALE.md discipline (one measured probe
 per changed family at a size big enough to expose a wrong asymptotic
 shape).
 
@@ -19,7 +19,7 @@ shape).
    (the heaviest ranking consumer) with intermediate release() — runs
    end-to-end, no cache residue.
 
-    python tools/r11_probe.py [scale] [probe ...]
+    python tools/scale_gate_ranking.py [scale] [probe ...]
 """
 
 from __future__ import annotations
